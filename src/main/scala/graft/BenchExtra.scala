@@ -26,7 +26,7 @@ import graft.sim.Scorer
  */
 object BenchExtra {
 
-  /** Same session shape as Bench.session (kept in sync by BenchExtraSpec). */
+  /** Same session shape as Bench.session. */
   private def session(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -1,8 +1,9 @@
 package graft.eval
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /**
  * Pairwise-classification and IR evaluation metrics as distributed
@@ -196,5 +197,55 @@ object Metrics {
       (col("srr") / col("n_queries") / 1000000.0).as("mrr"),
       (col("sap") / col("n_queries") / 1000000.0).as("map"),
       (col("sh1") / col("n_queries")).cast("double").as("p_at_1"))
+  }
+
+  /**
+   * The evaluation protocol of every scored-pair tier: theta swept on
+   * the TRAIN-split pairs only ([[graft.pipe.Threshold.bestThetaTrainSplit]]),
+   * then pair metrics at `dist <= theta` on the TEST split — theta is
+   * never tuned on the reported set. `scored` carries split_a/split_b
+   * (and idA/idB when MRR is read).
+   */
+  def trainTest(scored: DataFrame, dist: Column,
+                label: Column = col("label")): TrainTest =
+    new TrainTest(scored, dist, label)
+
+  final class TrainTest private[Metrics] (scored: DataFrame, dist: Column,
+                                          label: Column) {
+    val theta: Double =
+      graft.pipe.Threshold.bestThetaTrainSplit(scored, dist, label)
+
+    /** The TEST-split pairs the metrics are reported on. */
+    val test: DataFrame =
+      scored.filter(col("split_a") === "test" && col("split_b") === "test")
+
+    /** One row: confusion + precision/recall/F1/accuracy at theta. */
+    val pair: DataFrame = pairMetrics(test, (dist <= theta).cast("int"), label)
+
+    /** [[pair]] collected into a local DataFrame, so later actions on it
+      * cannot re-trigger the scoring lineage. */
+    def localPair: DataFrame =
+      scored.sparkSession.createDataFrame(
+        java.util.Arrays.asList(pair.collect(): _*), pair.schema)
+
+    /** (f1, precision, recall) at theta and the test-split MRR. */
+    def prfMrr: (Double, Double, Double, Double) = {
+      val m = pair.head()
+      val ir = irMetrics(test, dist, label).head()
+      (m.getAs[Double]("f1"), m.getAs[Double]("precision"),
+        m.getAs[Double]("recall"), ir.getAs[Double]("mrr"))
+    }
+
+    /** The trainer summary row: the `keys` config columns in order, then
+      * theta, f1, precision, recall, mrr. */
+    def summaryRow(keys: (String, Long)*): DataFrame = {
+      val (f1, p, r, mrr) = prfMrr
+      val schema = StructType(
+        keys.map(k => StructField(k._1, LongType, nullable = false)) ++
+          Seq("theta", "f1", "precision", "recall", "mrr")
+            .map(StructField(_, DoubleType, nullable = false)))
+      scored.sparkSession.createDataFrame(java.util.Arrays.asList(
+        Row.fromSeq(keys.map(_._2) ++ Seq(theta, f1, p, r, mrr))), schema)
+    }
   }
 }

@@ -3,6 +3,8 @@ package graft.gen
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /**
  * Deterministic synthetic source-code-repository table
  * `(id, side, repo, path, commit, lang, content, dni, split,
@@ -142,7 +144,7 @@ object Synth {
         .write.format("noop").mode("overwrite").save()
       keyed.unpersist(true)
       ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     finally spark.sparkContext.setJobDescription(null)
   }
 

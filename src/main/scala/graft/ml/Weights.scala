@@ -130,18 +130,8 @@ object Weights {
       (DataFrame, DataFrame) =
     EntryStages.memoModel(spark, sfDir, "veer") {
       val fit = veerFit(spark, sfDir, VeerReg, VeerIters)
-      val feats = veerFeatDf(spark, sfDir)
-      val dist = veerDist(fit)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        feats, dist, col("label"))
-      val test = feats.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), metrics.schema)
-      (weightRows(spark, VeerFeatures, fit.w, fit.b), local)
+      (weightRows(spark, VeerFeatures, fit.w, fit.b),
+        Metrics.trainTest(veerFeatDf(spark, sfDir), veerDist(fit)).localPair)
     }
 
   /** VEER: learned weights over the raw (jw, lev, cos) channels. */
@@ -237,17 +227,8 @@ object Weights {
     EntryStages.memoModel(spark, sfDir, "werl_batch") {
       val feats = werlBatchFeatDf(spark, sfDir)
       val fit = werlBatchFit(spark, sfDir, RLTransE.BatchCfg.epochs)
-      val dist = veerDist(fit)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        feats, dist, col("label"))
-      val test = feats.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), metrics.schema)
-      (weightRows(spark, WerlFeatures, fit.w, fit.b), local)
+      (weightRows(spark, WerlFeatures, fit.w, fit.b),
+        Metrics.trainTest(feats, veerDist(fit)).localPair)
     }
 
   /** grid_werl's epochs axis: half and full batch-fit training
@@ -265,16 +246,7 @@ object Weights {
     import spark0.implicits._
     val feats = werlBatchFeatDf(spark, sfDir, epochs)
     val fit = werlBatchFit(spark, sfDir, epochs)
-    val dist = veerDist(fit)
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      feats, dist, col("label"))
-    val test = feats.filter(col("split_a") === "test" &&
-      col("split_b") === "test")
-    val pm = Metrics.pairMetrics(test, (dist <= lit(theta)).cast("int"),
-      col("label")).head()
-    val ir = Metrics.irMetrics(test, dist, col("label")).head()
-    Seq((pm.getAs[Double]("f1"), pm.getAs[Double]("precision"),
-      pm.getAs[Double]("recall"), ir.getAs[Double]("mrr")))
+    Seq(Metrics.trainTest(feats, veerDist(fit)).prfMrr)
       .toDF("f1", "precision", "recall", "mrr")
   }
 
@@ -296,15 +268,9 @@ object Weights {
         .fieldScores(spark, sfDir, model, testOnly = false, l1 = l1)
         .persist()
       val dist = WerlFeatures.map(col).reduce(_ + _) / lit(WerlFeatures.length)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        fields, dist, col("label"))
-      val test = fields.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
+      val metrics = Metrics.trainTest(fields, dist).localPair
       fields.unpersist()
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), metrics.schema)
+      metrics
     }
 
   /** Parameterized VEER eval for the grid harness
@@ -317,18 +283,9 @@ object Weights {
                regParam: Double, maxIter: Int): DataFrame = {
     import spark.implicits._
     val fit = veerFit(spark, sfDir, regParam, maxIter)
-    val feats = veerFeatDf(spark, sfDir)
-    val dist = veerDist(fit)
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      feats, dist, col("label"))
-    val test = feats.filter(col("split_a") === "test" &&
-      col("split_b") === "test")
-    val pm = Metrics.pairMetrics(test, (dist <= lit(theta)).cast("int"),
-      col("label")).head()
-    val ir = Metrics.irMetrics(test, dist, col("label")).head()
-    Seq((regParam, maxIter.toLong, pm.getAs[Double]("f1"),
-      pm.getAs[Double]("precision"), pm.getAs[Double]("recall"),
-      ir.getAs[Double]("mrr")))
+    val (f1, p, r, mrr) =
+      Metrics.trainTest(veerFeatDf(spark, sfDir), veerDist(fit)).prfMrr
+    Seq((regParam, maxIter.toLong, f1, p, r, mrr))
       .toDF("reg", "max_iter", "f1", "precision", "recall", "mrr")
   }
 
@@ -455,17 +412,8 @@ object Weights {
     EntryStages.memoModel(spark, sfDir, "logrlt_batch") {
       val feats = logRltBatchFeatDf(spark, sfDir)
       val fit = logRltBatchFit(spark, sfDir)
-      val dist = veerDist(fit)
-      val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-        feats, dist, col("label"))
-      val test = feats.filter(col("split_a") === "test" &&
-        col("split_b") === "test")
-      val metrics = Metrics.pairMetrics(test,
-        (dist <= lit(theta)).cast("int"), col("label"))
-      val rows = metrics.collect()
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), metrics.schema)
-      (weightRows(spark, LogRltBatchFeatures, fit.w, fit.b), local)
+      (weightRows(spark, LogRltBatchFeatures, fit.w, fit.b),
+        Metrics.trainTest(feats, veerDist(fit)).localPair)
     }
 
   def logRltBatchWeights(spark: SparkSession, sfDir: String): DataFrame =

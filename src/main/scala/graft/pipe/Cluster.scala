@@ -66,6 +66,9 @@ object Cluster {
    * Connected components of the undirected edge set.
    * @return (node: Long, cluster: Long) for every node that appears in
    *         an edge; cluster = component minimum.
+   * @throws IllegalStateException when the edges have not reached their
+   *         fixpoint after `maxRounds` rounds: the labels would be
+   *         partial.
    */
   def connectedComponents(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
     val sess = edges.sparkSession
@@ -98,6 +101,10 @@ object Cluster {
         cur = next
         round += 1
       }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connected components did not converge in $round rounds " +
+            s"(maxRounds=$maxRounds, ${prev._1} edges in the last round)")
     } finally {
       sess.conf.set("spark.sql.shuffle.partitions", prevParts)
     }

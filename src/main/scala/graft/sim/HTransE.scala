@@ -78,20 +78,8 @@ object HTransE {
   /** Summary row (same shape as transe_eval): theta swept on the
     * TRAIN split, F1/MRR on the TEST split. */
   def eval(spark: SparkSession, sfDir: String,
-           cfg: TransE.Config = TransE.Config()): DataFrame = {
-    import spark.implicits._
-    val all = pairScores(spark, sfDir, cfg) // memo-persisted
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      all, col("dist"), col("label"))
-    val scores = all.filter(
-      col("split_a") === "test" && col("split_b") === "test")
-    val m = graft.eval.Metrics.pairMetrics(scores,
-      (col("dist") <= theta).cast("int"), col("label")).head()
-    val ir = graft.eval.Metrics.irMetrics(scores, col("dist"),
-      col("label")).head()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), ir.getAs[Double]("mrr")))
-      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
-  }
+           cfg: TransE.Config = TransE.Config()): DataFrame =
+    graft.eval.Metrics.trainTest(pairScores(spark, sfDir, cfg), // memo-persisted
+      col("dist"))
+      .summaryRow("dim" -> cfg.dim.toLong, "epochs" -> cfg.epochs.toLong)
 }

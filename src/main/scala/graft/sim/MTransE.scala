@@ -22,11 +22,12 @@ import graft.graph.GraphBuild
  *
  * The epoch alternates the optimizers exactly like the reference's
  * train loop (A pass, B pass, alignment pass, evolution pass). Spark
- * shape matches [[TransE.train]]: model broadcast per epoch, sparse
- * gradients in integer micro-units, one groupByKey shuffle per pass,
- * only model-sized rows on the driver.
+ * shape matches [[TransE.train]] ([[ExactGrad]]): model broadcast per
+ * epoch, sparse gradients in integer micro-units, one reduceByKey
+ * shuffle per pass, only model-sized rows on the driver.
  */
 object MTransE {
+  import ExactGrad.{Micro, corrupt, microQ, mix}
 
   /**
    * @param negRelRate relation corruptions per triple per epoch inside
@@ -46,15 +47,6 @@ object MTransE {
       relA: Array[Array[Float]], relB: Array[Array[Float]],
       m: Array[Array[Float]], evolveVec: Array[Array[Float]],
       lossByEpoch: Array[Double])
-
-  /** The sampler-oracle hash stream ([[NegativeSampler.fnvMix]]) —
-    * SQL-replayable, unlike the round-3 custom mix. */
-  private def mix(a: Long, b: Long): Long = NegativeSampler.fnvMix(a, b)
-
-  private final val Micro = 1e6
-
-  /** floor(x*1e6+0.5) — per-contribution micro quantizer (TransE). */
-  private def microQ(x: Double): Long = math.floor(x * Micro + 0.5).toLong
 
   /** M v for a dim x dim row-major matrix. */
   private def matVec(m: Array[Array[Float]], v: Array[Float]): Array[Float] = {
@@ -83,89 +75,34 @@ object MTransE {
             cfg: Config = Config()): Model = {
     import spark.implicits._
     val dim = cfg.dim
-    // FNV-seeded init (TransE.initComponent), matrix slots 0..5 —
-    // SQL-replayable, order-independent
-    def init(matId: Int, n: Int) = Array.tabulate(n)(row =>
-      Array.tabulate(dim)(j =>
-        TransE.initComponent(matId, row, j, cfg.seed, dim)))
-    val entA = init(0, nEntA); entA.foreach(Embed.l2normalize)
-    val entB = init(1, nEntB); entB.foreach(Embed.l2normalize)
-    val relA = init(2, nRel)
-    val relB = init(3, nRel)
-    val m = init(4, dim) // dim x dim alignment matrix, one row per id
-    val evolveVec = init(5, nRel)
+    // FNV-seeded init, matrix slots 0..5
+    val entA = ExactGrad.init(0, nEntA, cfg.seed, dim); entA.foreach(Embed.l2normalize)
+    val entB = ExactGrad.init(1, nEntB, cfg.seed, dim); entB.foreach(Embed.l2normalize)
+    val relA = ExactGrad.init(2, nRel, cfg.seed, dim)
+    val relB = ExactGrad.init(3, nRel, cfg.seed, dim)
+    // dim x dim alignment matrix, one row per id
+    val m = ExactGrad.init(4, dim, cfg.seed, dim)
+    val evolveVec = ExactGrad.init(5, nRel, cfg.seed, dim)
 
-    val offB = nEntA.toLong
-    val offRelA = offB + nEntB
-    val offRelB = offRelA + nRel
-    val offM = offRelB + nRel
-    val offEvo = offM + dim
+    val model = new ExactGrad.Layout(entA, entB, relA, relB, m, evolveVec)
+    val Array(_, offB, offRelA, offRelB, offM, offEvo, _) = model.offset
 
-    // 8 partitions: gradient rows duplicate per partition (see
-    // TransE.train) — keep the shuffle model-sized, not 64x model-sized.
-    // localCheckpoint truncates lineage so epochs don't re-analyze the
-    // full upstream plan.
     def ds(df: DataFrame): Dataset[(Long, Long, Long)] =
-      df.select(col(df.columns(0)).cast("long"), col(df.columns(1)).cast("long"),
-        col(df.columns(2)).cast("long")).as[(Long, Long, Long)]
-        .repartition(8).localCheckpoint()
+      ExactGrad.epochData(df.select(col(df.columns(0)).cast("long"),
+        col(df.columns(1)).cast("long"), col(df.columns(2)).cast("long"))
+        .as[(Long, Long, Long)])
     val dataA = ds(triplesA); val dataB = ds(triplesB)
     val dataAl = ds(aligned)
 
-    // per-side packed rejection indexes for relation corruption
+    // per-side rejection indexes for relation corruption
     val nRelL0 = nRel.toLong
-    def packed(data: Dataset[(Long, Long, Long)], nEnt: Long): Array[Long] =
-      if (cfg.negRelRate > 0)
-        data.map { case (h, t, r) => (h * nRelL0 + r) * nEnt + t }
-          .collect().sorted
-      else Array.emptyLongArray
-    val packedAB = spark.sparkContext.broadcast(
-      (packed(dataA, nEntA.toLong), packed(dataB, nEntB.toLong)))
+    def packed(data: Dataset[(Long, Long, Long)], nEnt: Long) =
+      ExactGrad.packedIndex(data, cfg.negRelRate > 0) {
+        case (h, t, r) => (h * nRelL0 + r) * nEnt + t }
+    val packedA = packed(dataA, nEntA.toLong)
+    val packedB = packed(dataB, nEntB.toLong)
 
     val losses = new Array[Double](cfg.epochs)
-
-    def reduceApply(rows: Dataset[(Long, Array[Long])]): Double = {
-      var loss = 0.0
-      // RDD reduceByKey at width 8 (map-side combine, exact long sums
-      // -> order-free) instead of the 64-partition typed shuffle; see
-      // TransE.train for the rationale
-      val reduced = rows.rdd.reduceByKey({ (x, y) =>
-        val s = new Array[Long](x.length)
-        var i = 0
-        while (i < s.length) { s(i) = x(i) + y(i); i += 1 }
-        s
-      }, 8).collect()
-      reduced.foreach { case (id, gv) =>
-        if (id == -1L) loss = gv(0) / Micro
-        else {
-          val target =
-            if (id < offB) entA(id.toInt)
-            else if (id < offRelA) entB((id - offB).toInt)
-            else if (id < offRelB) relA((id - offRelA).toInt)
-            else if (id < offM) relB((id - offRelB).toInt)
-            else if (id < offEvo) m((id - offM).toInt)
-            else evolveVec((id - offEvo).toInt)
-          var i = 0
-          while (i < dim) {
-            target(i) =
-              (target(i).toDouble - cfg.lr * (gv(i).toDouble / Micro)).toFloat
-            i += 1
-          }
-        }
-      }
-      loss
-    }
-
-    def emit(acc: java.util.HashMap[Long, Array[Long]], lossMicro: Long) = {
-      import scala.jdk.CollectionConverters._
-      val lossRow = {
-        val a = new Array[Long](dim)
-        a(0) = lossMicro
-        (-1L, a)
-      }
-      Iterator.single(lossRow) ++
-        acc.entrySet().asScala.iterator.map(kv => (kv.getKey, kv.getValue))
-    }
 
     var epoch = 0
     while (epoch < cfg.epochs) {
@@ -186,29 +123,15 @@ object MTransE {
           val (ea, eb, ra, rb) = bb.value
           val e = if (side == 0) ea else eb
           val r = if (side == 0) ra else rb
-          val acc = new java.util.HashMap[Long, Array[Long]]()
-          var lossMicro = 0L
-          def g(id: Long): Array[Long] = {
-            var v = acc.get(id)
-            if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-            v
-          }
-          val sorted =
-            if (side == 0) packedAB.value._1 else packedAB.value._2
+          val acc = new ExactGrad.Acc(dim)
+          val sorted = if (side == 0) packedA.value else packedB.value
           it.foreach { case (h, t, rl) =>
             // relation corruption: (h, t, r'), rejecting real triples
             var jr = 0
             while (jr < negRelRate && nRelL > 1) {
-              var rNeg = -1L
-              var att = 0
-              while (rNeg < 0 && att < 16) {
-                val d = mix(h * 31 + t + side * 131,
-                  0x9e3779b9L + (ep.toLong * negRelRate + jr) * 31 + att)
-                val c = ((d % nRelL) + nRelL) % nRelL
-                if (c != rl && java.util.Arrays.binarySearch(
-                    sorted, (h * nRelL + c) * nEntL + t) < 0) rNeg = c
-                att += 1
-              }
+              val y0 = 0x9e3779b9L + (ep.toLong * negRelRate + jr) * 31
+              val rNeg = corrupt(h * 31 + t + side * 131, att => y0 + att,
+                h, t, rl, nRelL, nEntL, sorted)
               if (rNeg >= 0) {
                 val eh = e(h.toInt); val et = e(t.toInt)
                 val er = r(rl.toInt); val ern = r(rNeg.toInt)
@@ -221,9 +144,9 @@ object MTransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(entOff + h); val gt = g(entOff + t)
-                  val gr = g(relOff + rl); val grn = g(relOff + rNeg)
+                  acc.loss(l)
+                  val gh = acc.g(entOff + h); val gt = acc.g(entOff + t)
+                  val gr = acc.g(relOff + rl); val grn = acc.g(relOff + rNeg)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -254,9 +177,9 @@ object MTransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(entOff + h); val gt = g(entOff + t)
-                  val gn = g(entOff + tNeg); val gr = g(relOff + rl)
+                  acc.loss(l)
+                  val gh = acc.g(entOff + h); val gt = acc.g(entOff + t)
+                  val gn = acc.g(entOff + tNeg); val gr = acc.g(relOff + rl)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -272,9 +195,9 @@ object MTransE {
               j += 1
             }
           }
-          emit(acc, lossMicro)
+          acc.emit
         }
-        val l = reduceApply(rows)
+        val l = ExactGrad.step(rows, cfg.lr, model)
         bb.destroy()
         l
       }
@@ -296,13 +219,7 @@ object MTransE {
       val nEntBL = nEntB.toLong
       val rows = dataAl.mapPartitions { it =>
         val (ea, eb, mm, ev) = bb.value
-        val acc = new java.util.HashMap[Long, Array[Long]]()
-        var lossMicro = 0L
-        def g(id: Long): Array[Long] = {
-          var v = acc.get(id)
-          if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-          v
-        }
+        val acc = new ExactGrad.Acc(dim)
         it.foreach { case (a, b, rl) =>
           val va = ea(a.toInt)
           val ma = matVec(mm, va)
@@ -342,7 +259,7 @@ object MTransE {
             val negMean = negSum / nNeg
             val l = pos - negMean + margin
             if (l > 0) {
-              lossMicro += microQ(l)
+              acc.loss(l)
               val inv = 1.0 / nNeg
               // effective sign vector: sigma_pos - mean_j sigma_negj —
               // exact multiples of 1/nNeg (nNeg <= 2), so every
@@ -353,7 +270,7 @@ object MTransE {
               j = 0
               while (j < nNeg) {
                 val vn = eb(negIds(j).toInt)
-                val gn = g(offB + negIds(j))
+                val gn = acc.g(offB + negIds(j))
                 i = 0
                 while (i < dim) {
                   val sn = math.signum(ma(i).toDouble +
@@ -364,9 +281,9 @@ object MTransE {
                 }
                 j += 1
               }
-              val gb = g(offB + b)
-              val gaRow = g(a)
-              val gv = if (vec != null) g(offEvo + rl) else null
+              val gb = acc.g(offB + b)
+              val gaRow = acc.g(a)
+              val gv = if (vec != null) acc.g(offEvo + rl) else null
               i = 0
               while (i < dim) {
                 gb(i) -= microQ(sigma(i))
@@ -376,7 +293,7 @@ object MTransE {
                 var k2 = 0
                 while (k2 < dim) { s += mm(k2)(i).toDouble * eff(k2); k2 += 1 }
                 gaRow(i) += microQ(s)
-                val gm = g(offM + i)
+                val gm = acc.g(offM + i)
                 k2 = 0
                 while (k2 < dim) { gm(k2) += microQ(eff(i) * va(k2)); k2 += 1 }
                 i += 1
@@ -384,9 +301,9 @@ object MTransE {
             }
           }
         }
-        emit(acc, lossMicro)
+        acc.emit
       }
-      val lossAl = reduceApply(rows)
+      val lossAl = ExactGrad.step(rows, cfg.lr, model)
       bb.destroy()
       entA.foreach(Embed.l2normalize)
       entB.foreach(Embed.l2normalize)
@@ -394,7 +311,7 @@ object MTransE {
       epoch += 1
     }
     dataA.unpersist(); dataB.unpersist(); dataAl.unpersist()
-    packedAB.destroy()
+    packedA.destroy(); packedB.destroy()
     Model(entA, entB, relA, relB, m, evolveVec, losses)
   }
 
@@ -408,11 +325,7 @@ object MTransE {
     val nB = entsB.count().toInt
     val triplesA = GraphBuild.ererTriples(spark, sfDir, "A")
     val triplesB = GraphBuild.ererTriples(spark, sfDir, "B")
-    def recIds(ents: DataFrame) = ents
-      .filter(col("label").rlike("^r[0-9]+$"))
-      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
-        col("ent_id"))
-    val recA = recIds(entsA); val recB = recIds(entsB)
+    val recA = ExactGrad.recordIds(entsA); val recB = ExactGrad.recordIds(entsB)
     val priors = GraphBuild.priorPairs(spark, sfDir)
       .join(recA.select(col("rid").as("idA"), col("ent_id").as("a")), "idA")
       .join(recB.select(col("rid").as("idB"), col("ent_id").as("b")), "idB")
@@ -433,23 +346,8 @@ object MTransE {
     }
     val model = train(spark, triplesA, triplesB, aligned, nA, nB,
       GraphBuild.Relations.size, cfg)
-    val mB = spark.sparkContext.broadcast((model.entA, model.entB, model.m))
-    val out = graft.EntryStages.cand(spark, sfDir)
-      .select(col("idA"), col("idB"),
-        (col("dni_a") === col("dni_b")).cast("long").as("label"),
-        col("split_a"), col("split_b"))
-      .join(recA.select(col("rid").as("idA"), col("ent_id").as("ka")), "idA")
-      .join(recB.select(col("rid").as("idB"), col("ent_id").as("kb")), "idB")
-      .select(col("idA"), col("idB"), col("ka"), col("kb"), col("label"),
-        col("split_a"), col("split_b"))
-      .as[(Long, Long, Long, Long, Long, String, String)]
-      .mapPartitions { it =>
-        val (ea, eb, mm) = mB.value
-        it.map { case (x, y, ka, kb, lbl, sa, sb) =>
-          (x, y, Embed.cosine(matVec(mm, ea(ka.toInt)), eb(kb.toInt)), lbl,
-            sa, sb)
-        }
-      }.toDF("idA", "idB", "cos", "label", "split_a", "split_b")
+    val out = ExactGrad.candidateCosines(spark, sfDir, recA, recB,
+      model.entA.map(matVec(model.m, _)), model.entB)
     entsA.unpersist(); entsB.unpersist()
     out
   }
@@ -458,21 +356,11 @@ object MTransE {
     * on the TRAIN-split pairs only, metrics reported on the TEST split. */
   def eval(spark: SparkSession, sfDir: String,
            cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
     val all = pairScores(spark, sfDir, cfg).persist()
-    val dist = lit(1.0) - col("cos")
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      all, dist, col("label"))
-    val scores = all.filter(
-      col("split_a") === "test" && col("split_b") === "test")
-    val m = graft.eval.Metrics.pairMetrics(scores,
-      (dist <= theta).cast("int"), col("label")).head()
-    val ir = graft.eval.Metrics.irMetrics(scores, dist, col("label")).head()
+    val row = graft.eval.Metrics.trainTest(all, lit(1.0) - col("cos"))
+      .summaryRow("dim" -> cfg.dim.toLong, "epochs" -> cfg.epochs.toLong,
+        "evolve" -> (if (cfg.evolve) 1L else 0L))
     all.unpersist()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, if (cfg.evolve) 1L else 0L, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), ir.getAs[Double]("mrr")))
-      .toDF("dim", "epochs", "evolve", "theta", "f1", "precision", "recall",
-        "mrr")
+    row
   }
 }

@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
  *
  * REPLAY DISCIPLINE (the DuckDB oracle re-runs the whole training,
  * [[graft.oracle.OracleSqlTransE]]):
- *  - init is FNV-seeded per (matrix, row, dim) — [[initComponent]] —
- *    not a sequential java.util.Random stream;
+ *  - init is FNV-seeded per (matrix, row, dim) —
+ *    [[ExactGrad.initComponent]] — not a sequential java.util.Random
+ *    stream;
  *  - all per-dim arithmetic is EXPLICIT DOUBLE with left-to-right
  *    accumulation order (the SQL unrolls the same literal chains);
  *  - every per-triple gradient contribution is quantized to integer
@@ -44,6 +45,7 @@ import org.apache.spark.sql.functions._
  * vocabulary (/root/reference/VEG/rltranse.py:33-53).
  */
 object TransE {
+  import ExactGrad.{Micro, corrupt, microQ, mix}
 
   /**
    * @param normalizeRel L2-normalize relation rows per epoch, as the
@@ -75,11 +77,6 @@ object TransE {
                          wRel: Array[Array[Float]],
                          lossByEpoch: Array[Double])
 
-  /** Seeded mix shared with the sampler oracles — the ONE hash stream
-    * the DuckDB side already replays ([[NegativeSampler.fnvMix]] /
-    * OracleSql.fnvMixChainW). */
-  private def mix(a: Long, b: Long): Long = NegativeSampler.fnvMix(a, b)
-
   /** Salt separating the relation-corruption draw stream from the tail
     * stream (same `mix`, disjoint y inputs) — shared verbatim with the
     * DuckDB replay. */
@@ -89,37 +86,6 @@ object TransE {
     * DuckDB grid replay ([[graft.oracle.OracleSqlTransE.gridTranse]]). */
   final val GridDims = Seq(8, 16)
   final val GridNegRel = Seq(0, 1)
-
-  /**
-   * FNV-seeded uniform init in [-bound, bound): matrix `matId` (8
-   * per-trainer stream slots: TransE uses 0=ent, 1=rel, 2=wRel; KrEar
-   * 0..4; MTransE its own set) row `row` dim `j`, bound = 6/sqrt(dim)
-   * (the reference's Xavier-style range,
-   * /root/reference/ER/transe.py:33-36). A pure function of its
-   * arguments — SQL-replayable and independent of init ORDER, unlike
-   * the java.util.Random stream it replaces.
-   */
-  private[graft] def initComponent(matId: Int, row: Int, j: Int,
-                                   seed: Long, dim: Int): Float = {
-    // stream packing allots 3 bits to matId and 6 to j: past those
-    // bounds the (seed, j) streams of ADJACENT seeds would silently
-    // alias, weakening init independence (ADVICE r4)
-    require(j < 64 && dim <= 64, s"init stream packing needs dim <= 64 (dim=$dim)")
-    require(matId < 8, s"init stream packing needs matId < 8 (matId=$matId)")
-    val h = mix(row.toLong * 8L + matId, seed * 64L + j)
-    val u = (h >>> 11).toDouble / 9007199254740992.0
-    ((u * 2.0 - 1.0) * (6.0 / math.sqrt(dim))).toFloat
-  }
-
-  /** Gradients ship as exact integer micro-units: long addition is
-    * associative+commutative, so the shuffle reduction is
-    * order-independent and training deterministic. */
-  private final val Micro = 1e6
-
-  /** Integer micro-unit quantizer (floor(x*1e6 + 0.5), NOT rint:
-    * half-up ties replay as `floor(x*1000000.0 + 0.5)` in SQL, where
-    * rint's half-even would not). */
-  private def microQ(x: Double): Long = math.floor(x * Micro + 0.5).toLong
 
   /**
    * @param triples (h, t, r, idx) with dense ids in [0, nEnt) /
@@ -132,37 +98,23 @@ object TransE {
   def train(spark: SparkSession, triples: DataFrame, nEnt: Int, nRel: Int,
             cfg: Config = Config()): Model = {
     import spark.implicits._
-    def init(matId: Int, n: Int) = Array.tabulate(n)(row =>
-      Array.tabulate(cfg.dim)(j => initComponent(matId, row, j, cfg.seed,
-        cfg.dim)))
-    val ent = init(0, nEnt)
+    val ent = ExactGrad.init(0, nEnt, cfg.seed, cfg.dim)
     ent.foreach(Embed.l2normalize)
-    val rel = init(1, nRel)
+    val rel = ExactGrad.init(1, nRel, cfg.seed, cfg.dim)
     // TransH per-relation hyperplane normals (unit length,
     // /root/reference/ER/transh.py:114-122)
-    val wRel = init(2, nRel)
+    val wRel = ExactGrad.init(2, nRel, cfg.seed, cfg.dim)
     wRel.foreach(Embed.l2normalize)
-    // Few wide partitions: each partition emits one dense gradient row
-    // per entity it touches, so gradient-shuffle volume scales with
-    // (partitions x touched entities) — 8 partitions keeps the epoch
-    // CPU parallel while bounding duplicate gradient rows.
-    // localCheckpoint truncates the logical plan: otherwise every epoch
-    // re-analyzes the full upstream lineage (dictionary windows/joins),
-    // which dominates the epoch wall time.
-    val data = triples.select(col("h").cast("long"), col("t").cast("long"),
-      col("r").cast("long"), col("idx").cast("long"))
-      .as[(Long, Long, Long, Long)].repartition(8).localCheckpoint()
-    // Packed-triple rejection index for relation corruption: 8 bytes
-    // per triple, broadcast ONCE for the whole training (the graph is
-    // O(records x fields) — the same order as the entity matrix already
-    // broadcast every epoch).
+    // gradient ids: entity id in [0, nEnt); relation row at nEnt + r;
+    // hyperplane row at nEnt + nRel + r
+    val model = new ExactGrad.Layout(ent, rel, wRel)
+    val data = ExactGrad.epochData(triples.select(col("h").cast("long"),
+      col("t").cast("long"), col("r").cast("long"), col("idx").cast("long"))
+      .as[(Long, Long, Long, Long)])
+    // rejection index for relation corruption
     val nEntL0 = nEnt.toLong; val nRelL0 = nRel.toLong
-    val packedTriples: Array[Long] =
-      if (cfg.negRelRate > 0)
-        data.map { case (h, t, r, _) => (h * nRelL0 + r) * nEntL0 + t }
-          .collect().sorted
-      else Array.emptyLongArray
-    val packedB = spark.sparkContext.broadcast(packedTriples)
+    val packedB = ExactGrad.packedIndex(data, cfg.negRelRate > 0) {
+      case (h, t, r, _) => (h * nRelL0 + r) * nEntL0 + t }
     val losses = new Array[Double](cfg.epochs)
 
     var epoch = 0
@@ -177,22 +129,10 @@ object TransE {
       val tailRanges = cfg.tailRanges
       val nEntL = nEnt.toLong
       val nRelL = nRel.toLong
-      // per-partition sparse gradients + loss, as micro-unit long rows;
-      // keys: entity id in [0, nEnt); relation row at nEnt + r;
-      // hyperplane row at nEnt + nRel + r; loss at -1. One key per
-      // model row (head- and tail-role gradients MERGE here), so the
-      // driver applies exactly one update per touched row — no
-      // order-dependent double-rounding of the same float row.
       val grads = data.mapPartitions { it =>
         val (e, r, wv) = entB.value
         val sortedPacked = packedB.value
-        val acc = new java.util.HashMap[Long, Array[Long]]()
-        var lossMicro = 0L
-        def g(id: Long): Array[Long] = {
-          var v = acc.get(id)
-          if (v == null) { v = new Array[Long](dim); acc.put(id, v) }
-          v
-        }
+        val acc = new ExactGrad.Acc(dim)
         it.foreach { case (h, t, rl, idx) =>
           var j = 0
           while (j < negRate) {
@@ -216,9 +156,9 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(h); val gt = g(t); val gn = g(tNeg)
-                  val gr = g(nEntL + rl)
+                  acc.loss(l)
+                  val gh = acc.g(h); val gt = acc.g(t); val gn = acc.g(tNeg)
+                  val gr = acc.g(nEntL + rl)
                   i = 0
                   while (i < dim) {
                     // exact integers: signum of nonzero doubles is ±1
@@ -250,7 +190,7 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
+                  acc.loss(l)
                   var swP = 0.0; var swN = 0.0
                   i = 0
                   while (i < dim) {
@@ -260,9 +200,9 @@ object TransE {
                       eh(i).toDouble - en(i) - wduN * w(i) + er(i)) * w(i)
                     i += 1
                   }
-                  val gh = g(h); val gt = g(t); val gn = g(tNeg)
-                  val gr = g(nEntL + rl)
-                  val gw = g(nEntL + nRelL + rl)
+                  val gh = acc.g(h); val gt = acc.g(t); val gn = acc.g(tNeg)
+                  val gr = acc.g(nEntL + rl)
+                  val gw = acc.g(nEntL + nRelL + rl)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(
@@ -289,16 +229,9 @@ object TransE {
           // rejection against the broadcast packed index)
           var jr = 0
           while (jr < negRelRate && nRelL > 1) {
-            var rNeg = -1L
-            var att = 0
-            while (rNeg < 0 && att < 16) {
-              val d = mix(idx,
-                RelCorruptSalt ^ (ep.toLong * negRelRate + jr) * 31 + att)
-              val c = ((d % nRelL) + nRelL) % nRelL
-              if (c != rl && java.util.Arrays.binarySearch(
-                  sortedPacked, (h * nRelL + c) * nEntL + t) < 0) rNeg = c
-              att += 1
-            }
+            val k = (ep.toLong * negRelRate + jr) * 31
+            val rNeg = corrupt(idx, att => RelCorruptSalt ^ (k + att),
+              h, t, rl, nRelL, nEntL, sortedPacked)
             if (rNeg >= 0) {
               val eh = e(h.toInt); val et = e(t.toInt)
               val er = r(rl.toInt); val ern = r(rNeg.toInt)
@@ -312,9 +245,9 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
-                  val gh = g(h); val gt = g(t)
-                  val gr = g(nEntL + rl); val grn = g(nEntL + rNeg)
+                  acc.loss(l)
+                  val gh = acc.g(h); val gt = acc.g(t)
+                  val gr = acc.g(nEntL + rl); val grn = acc.g(nEntL + rNeg)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(eh(i).toDouble + er(i) - et(i))
@@ -346,7 +279,7 @@ object TransE {
                 }
                 val l = pos - neg + margin
                 if (l > 0) {
-                  lossMicro += microQ(l)
+                  acc.loss(l)
                   var swP = 0.0; var swN = 0.0
                   i = 0
                   while (i < dim) {
@@ -356,10 +289,10 @@ object TransE {
                       eh(i).toDouble - et(i) - wduN * w2(i) + ern(i)) * w2(i)
                     i += 1
                   }
-                  val gh = g(h); val gt = g(t)
-                  val gr = g(nEntL + rl); val grn = g(nEntL + rNeg)
-                  val gw = g(nEntL + nRelL + rl)
-                  val gw2 = g(nEntL + nRelL + rNeg)
+                  val gh = acc.g(h); val gt = acc.g(t)
+                  val gr = acc.g(nEntL + rl); val grn = acc.g(nEntL + rNeg)
+                  val gw = acc.g(nEntL + nRelL + rl)
+                  val gw2 = acc.g(nEntL + nRelL + rNeg)
                   i = 0
                   while (i < dim) {
                     val sp = math.signum(
@@ -382,44 +315,9 @@ object TransE {
             jr += 1
           }
         }
-        import scala.jdk.CollectionConverters._
-        val lossRow = {
-          val a = new Array[Long](dim)
-          a(0) = lossMicro
-          (-1L, a)
-        }
-        Iterator.single(lossRow) ++
-          acc.entrySet().asScala.iterator.map(kv => (kv.getKey, kv.getValue))
+        acc.emit
       }
-      // ONE shuffle: exact element-wise long sums per model row; only
-      // the reduced (model-sized) rows reach the driver. RDD
-      // reduceByKey at the trainer's own width (8) instead of the
-      // typed groupByKey path: map-side combine plus 8 reduce tasks
-      // per epoch, not a session-wide 64-partition encoder shuffle —
-      // long sums are commutative/associative, so the reduced values
-      // are bit-identical under any partitioning.
-      val reduced = grads.rdd.reduceByKey({ (a, b) =>
-        val s = new Array[Long](a.length)
-        var i = 0
-        while (i < s.length) { s(i) = a(i) + b(i); i += 1 }
-        s
-      }, 8).collect()
-
-      reduced.foreach { case (id, gv) =>
-        if (id == -1L) losses(epoch) = gv(0) / Micro
-        else {
-          val target =
-            if (id < nEntL) ent(id.toInt)
-            else if (id < nEntL + nRelL) rel((id - nEntL).toInt)
-            else wRel((id - nEntL - nRelL).toInt)
-          var i = 0
-          while (i < cfg.dim) {
-            target(i) =
-              (target(i).toDouble - cfg.lr * (gv(i).toDouble / Micro)).toFloat
-            i += 1
-          }
-        }
-      }
+      losses(epoch) = ExactGrad.step(grads, cfg.lr, model)
       ent.foreach(Embed.l2normalize)
       // forced under relation corruption: every relation row receives
       // a hinge term from EVERY triple of that relation per epoch
@@ -474,53 +372,21 @@ object TransE {
 
   private def pairScoresUncached(spark: SparkSession, sfDir: String,
                                  cfg: Config): DataFrame = {
-    import spark.implicits._
     val ents = graft.graph.GraphBuild.erEntities(spark, sfDir)
     val nEnt = ents.count().toInt
     val nRel = graft.graph.GraphBuild.Relations.size
     val triples = graft.graph.GraphBuild.erTriples(spark, sfDir)
       .withColumn("idx", packedIdx(nEnt.toLong, nRel.toLong))
     val model = train(spark, triples, nEnt, nRel, cfg)
-    // record label -> entity id resolved by join, not a driver map
-    val recEnt = ents.filter(col("label").rlike("^r[0-9]+$"))
-      .select(substring(col("label"), 2, 20).cast("long").as("rid"),
-        col("ent_id"))
-    val entB = spark.sparkContext.broadcast(model.ent)
-    graft.EntryStages.cand(spark, sfDir)
-      .select(col("idA"), col("idB"), col("block_key"),
-        (col("dni_a") === col("dni_b")).cast("long").as("label"),
-        col("split_a"), col("split_b"))
-      .join(recEnt.select(col("rid").as("idA"), col("ent_id").as("entA")), "idA")
-      .join(recEnt.select(col("rid").as("idB"), col("ent_id").as("entB")), "idB")
-      .select(col("idA"), col("idB"), col("block_key"), col("entA"),
-        col("entB"), col("label"), col("split_a"), col("split_b"))
-      .as[(Long, Long, String, Long, Long, Long, String, String)]
-      .mapPartitions { it =>
-        val e = entB.value
-        it.map { case (a, b, bk, ea, eb, lbl, sa, sb) =>
-          (a, b, bk, Embed.cosine(e(ea.toInt), e(eb.toInt)), lbl, sa, sb)
-        }
-      }.toDF("idA", "idB", "block_key", "cos", "label",
-        "split_a", "split_b")
+    val rec = ExactGrad.recordIds(ents)
+    ExactGrad.candidateCosines(spark, sfDir, rec, rec, model.ent, model.ent)
   }
 
   /** Summary row: theta swept on the TRAIN-split pairs only, F1/MRR
     * reported on the TEST split (never tuned on the reported set). */
   def eval(spark: SparkSession, sfDir: String,
-           cfg: Config = Config()): DataFrame = {
-    import spark.implicits._
-    val all = pairScores(spark, sfDir, cfg) // memo-persisted
-    val dist = lit(1.0) - col("cos")
-    val theta = graft.pipe.Threshold.bestThetaTrainSplit(
-      all, dist, col("label"))
-    val scores = all.filter(
-      col("split_a") === "test" && col("split_b") === "test")
-    val m = graft.eval.Metrics.pairMetrics(scores,
-      (dist <= theta).cast("int"), col("label")).head()
-    val ir = graft.eval.Metrics.irMetrics(scores, dist, col("label")).head()
-    Seq((cfg.dim.toLong, cfg.epochs.toLong, theta,
-      m.getAs[Double]("f1"), m.getAs[Double]("precision"),
-      m.getAs[Double]("recall"), ir.getAs[Double]("mrr")))
-      .toDF("dim", "epochs", "theta", "f1", "precision", "recall", "mrr")
-  }
+           cfg: Config = Config()): DataFrame =
+    graft.eval.Metrics.trainTest(pairScores(spark, sfDir, cfg), // memo-persisted
+      lit(1.0) - col("cos"))
+      .summaryRow("dim" -> cfg.dim.toLong, "epochs" -> cfg.epochs.toLong)
 }

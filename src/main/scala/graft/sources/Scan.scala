@@ -5,6 +5,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import scala.util.control.NonFatal
+
 /**
  * Parquet scan helper for coarse-row-group local tables (optimization
  * guide §2.5, "input skew: one huge unsplittable file ... repartition
@@ -60,5 +62,5 @@ object Scan {
         i += 1
       }
       groups < par
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
 }

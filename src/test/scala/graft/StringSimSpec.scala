@@ -156,6 +156,23 @@ class StringSimSpec extends AnyFunSuite {
     rows.foreach(r => assert(r.getInt(0) == r.getInt(1), r.toString))
   }
 
+  test("astral characters: graft_levenshtein counts UTF-16 code units, Spark's code points") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, levenshtein}
+    // U+1F600 / U+1F601 share their high surrogate; U+1D400 shares none
+    val (grin, grin1, boldA) = ("\uD83D\uDE00", "\uD83D\uDE01", "\uD835\uDC00")
+    val pairs = Seq(
+      (grin, "", 2, 1), (grin, "x", 2, 1), (grin, grin1, 1, 1),
+      (grin, boldA, 2, 1), (s"a${grin}b", s"a${grin1}b", 1, 1),
+      (s"ab$grin", "ab", 2, 1))
+    val rows = pairs.map(p => (p._1, p._2)).toDF("a", "b").select(
+      graft.functions.GraftFunctions.graft_levenshtein(col("a"), col("b")),
+      levenshtein(col("a"), col("b"))).as[(Int, Int)].collect()
+    assert(rows.toSeq == pairs.map(p => (p._3, p._4)))
+    assert(pairs.forall(p => StringSim.levenshtein(p._1, p._2) == p._3))
+  }
+
   test("jaro_winkler Catalyst expression equals the Scala kernel and works in SQL") {
     val spark = SparkTestSession.spark
     import spark.implicits._

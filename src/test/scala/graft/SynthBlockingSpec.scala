@@ -16,6 +16,11 @@ class SynthBlockingSpec extends AnyFunSuite {
     assert(r1.select("id").distinct().count() == r1.count())
     assert(r1.filter(col("content") === "" || col("content").isNull).count() == 0)
     assert(r1.select("side").distinct().count() == 2)
+    // the scorer memoizes record vectors per partition by id alone
+    // (sim/Scorer.scala): an id on both sides would score one record's
+    // text for the other
+    val ids = (side: String) => r1.filter(col("side") === side).select("id")
+    assert(ids("A").intersect(ids("B")).isEmpty)
   }
 
   test("sha column is sha2-256 of raw content (row invariant)") {
@@ -36,6 +41,7 @@ class SynthBlockingSpec extends AnyFunSuite {
     val truth = both.count()
     val truthInCand = cand.filter(col("dni_a") === col("dni_b")).count()
     assert(truthInCand == truth)
+    assert(cand.select("idA").intersect(cand.select("idB")).isEmpty)
   }
 
   test("full-index mode pairs every A with every B, guard rail refuses oversize") {

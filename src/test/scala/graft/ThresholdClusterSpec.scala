@@ -46,5 +46,11 @@ class ThresholdClusterSpec extends AnyFunSuite {
     val cc = Cluster.connectedComponents(edges).as[(Long, Long)].collect()
     assert(cc.length == n)
     assert(cc.forall(_._2 == 1L))
+    // one round cannot reach the fixpoint: throw, never partial labels
+    val e = intercept[IllegalStateException] {
+      Cluster.connectedComponents(edges, maxRounds = 1)
+    }
+    assert(e.getMessage.contains("did not converge in 1 rounds"), e.getMessage)
+    assert(e.getMessage.contains("edges in the last round"), e.getMessage)
   }
 }
