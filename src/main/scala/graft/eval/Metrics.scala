@@ -206,12 +206,12 @@ object Metrics {
    * never tuned on the reported set. `scored` carries split_a/split_b
    * (and idA/idB when MRR is read).
    */
-  def trainTest(scored: DataFrame, dist: Column,
-                label: Column = col("label")): TrainTest =
-    new TrainTest(scored, dist, label)
+  def trainTest(scored: DataFrame, dist: Column): TrainTest =
+    new TrainTest(scored, dist)
 
-  final class TrainTest private[Metrics] (scored: DataFrame, dist: Column,
-                                          label: Column) {
+  final class TrainTest private[Metrics] (scored: DataFrame, dist: Column) {
+    private val label = col("label")
+
     val theta: Double =
       graft.pipe.Threshold.bestThetaTrainSplit(scored, dist, label)
 

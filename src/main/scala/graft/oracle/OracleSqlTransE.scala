@@ -10,9 +10,9 @@ import graft.sim.TransE
  *
  * Why this is bit-exact (the trainer's replay discipline,
  * TransE.scala):
- *  - init is the FNV-seeded [[TransE.initComponent]] — replayed
- *    through the same fnvMixChainW CTE machinery as the sampler
- *    oracles;
+ *  - init is the FNV-seeded [[graft.sim.ExactGrad.initComponent]] —
+ *    replayed through the same fnvMixChainW CTE machinery as the
+ *    sampler oracles;
  *  - negative tails are fnvMix draws keyed by the PACKED triple id
  *    ((h*nRel + r)*nEnt + t) and the (epoch, j) counter — pure integer
  *    inputs both engines share; relation corruptions (neg_rel_rate)
@@ -82,7 +82,8 @@ object OracleSqlTransE {
     def csv(f: Int => String): String = dims.map(f).mkString(",\n    ")
 
     /** (h >>> 11)/2^53 -> [-bound, bound) float init component — the SQL
-      * image of [[TransE.initComponent]]'s tail given the chain column. */
+      * image of [[graft.sim.ExactGrad.initComponent]]'s tail given the
+      * chain column. */
     def initExpr(h: String): String =
       s"CAST((CAST($h >> 11 AS DOUBLE) / 9007199254740992.0 * 2.0 - 1.0)" +
         s" * (6.0 / sqrt(${D}.0)) AS REAL)"
